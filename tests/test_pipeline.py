@@ -1,13 +1,21 @@
-"""End-to-end replay of the reference's own inputs through the engine.
+"""End-to-end replay of HHS/CMS inputs through the engine.
 
-Loads two real HHS weekly CSVs + one CMS snapshot (read-only from
-/root/reference/, used as data fixtures) into a temp ParquetStore and
-asserts the reference's load semantics: cross-file dedup, validation
-quarantine, first-wins, the 'Not Available'→0 rating quirk, and that
-all seven report queries run over the resulting store.
+Loads two HHS weekly CSVs + one CMS snapshot into a temp ParquetStore
+and asserts the reference's load semantics: cross-file dedup,
+validation quarantine, first-wins, the 'Not Available'→0 rating quirk,
+and that all seven report queries run over the resulting store.  The
+inputs are the reference's own extracts (read-only, at the paths
+below) when all three are present, and otherwise deterministic
+FIXTURES.md §A inputs written by ``tests/hospital_fixtures.py``.
 """
 
 from __future__ import annotations
+
+import csv
+import os
+import subprocess
+import sys
+from pathlib import Path
 
 import pytest
 
@@ -17,6 +25,7 @@ from team_aragon_spark.pipeline.hhs_load import load_hhs_batch
 from team_aragon_spark.pipeline.quality_load import load_quality_batch
 from team_aragon_spark.pipeline.sinks import ParquetStore
 from team_aragon_spark.plans import reports
+from tests.hospital_fixtures import write_hospital_csvs
 
 HHS_W1 = "/root/reference/hhs_data/2022-09-23-hhs-data.csv"
 HHS_W2 = "/root/reference/hhs_data/2022-09-30-hhs-data.csv"
@@ -24,13 +33,62 @@ CMS_1 = "/root/reference/hospital_data/Hospital_General_Information-2021-07.csv"
 
 
 @pytest.fixture(scope="module")
-def store(spark, tmp_path_factory):
+def hospital_csvs(tmp_path_factory):
+    """``(hhs_w1, hhs_w2, cms)`` input paths: the reference extracts when
+    all three exist, else generated ones."""
+    reference = (HHS_W1, HHS_W2, CMS_1)
+    if all(os.path.exists(p) for p in reference):
+        return reference
+    return write_hospital_csvs(tmp_path_factory.mktemp("hospital_csvs"))
+
+
+@pytest.fixture(scope="module")
+def store(spark, hospital_csvs, tmp_path_factory):
+    hhs_w1, hhs_w2, cms = hospital_csvs
     root = tmp_path_factory.mktemp("store")
     s = ParquetStore(str(root))
-    r1 = load_hhs_batch(spark, HHS_W1, s, quarantine_dir=str(root / "quarantine_w1"))
-    r2 = load_hhs_batch(spark, HHS_W2, s, quarantine_dir=str(root / "quarantine_w2"))
-    q1 = load_quality_batch(spark, "2021-07-01", CMS_1, s)
+    r1 = load_hhs_batch(spark, hhs_w1, s, quarantine_dir=str(root / "quarantine_w1"))
+    r2 = load_hhs_batch(spark, hhs_w2, s, quarantine_dir=str(root / "quarantine_w2"))
+    q1 = load_quality_batch(spark, "2021-07-01", cms, s)
     return s, r1, r2, q1
+
+
+def _read_csv(path):
+    with open(path, newline="", encoding="utf-8") as f:
+        return list(csv.DictReader(f))
+
+
+def test_generated_inputs_contract(tmp_path):
+    """The generated inputs carry every case the tests below rely on,
+    so they cannot pass vacuously on synthetic data, and a fixed seed
+    writes the same bytes in any process (no Spark, no hash seed)."""
+    from team_aragon_spark.schemas import CMS_CONSUMED_COLS, HHS_BED_METRIC_COLS, HHS_CONSUMED_SCHEMA
+
+    paths = write_hospital_csvs(tmp_path / "a")
+    again = write_hospital_csvs(tmp_path / "b")
+    script = (
+        "import sys; from tests.hospital_fixtures import write_hospital_csvs; "
+        f"write_hospital_csvs({str(tmp_path / 'c')!r}); assert 'pyspark' not in sys.modules"
+    )
+    env = {**os.environ, "PYTHONHASHSEED": "12345"}
+    subprocess.run([sys.executable, "-c", script], check=True, env=env, cwd=Path(__file__).parent.parent)
+    for p, q in zip(paths, again):
+        name = Path(p).name
+        assert Path(p).read_bytes() == Path(q).read_bytes() == (tmp_path / "c" / name).read_bytes(), name
+
+    w1, w2, cms = (_read_csv(p) for p in paths)
+    cells = [r[c] for r in w1 for c in HHS_BED_METRIC_COLS]
+    assert any(r["address"] == "NA" for r in w1) and "NA" in cells
+    assert "-999999" in cells
+    assert any(v not in ("NA", "-999999") and float(v) < 0 for v in cells)
+    pks1 = {r["hospital_pk"] for r in w1}
+    assert len(pks1) == len(w1)
+    assert sum(r["hospital_pk"] in pks1 for r in w2) / len(w2) >= 0.999
+    assert any(r["Hospital overall rating"] == "Not Available" for r in cms)
+    state_of = {r["hospital_pk"]: r["state"] for r in w1}
+    assert len({state_of[r["Facility ID"]] for r in cms if r["Facility ID"] in state_of}) >= 10
+    assert set(w1[0]) - set(HHS_CONSUMED_SCHEMA.fieldNames())
+    assert set(cms[0]) - set(CMS_CONSUMED_COLS)
 
 
 def test_week1_load_counts(spark, store):
@@ -84,9 +142,9 @@ def test_quality_not_available_becomes_zero(spark, store):
     assert quality.filter(F.col("emergency_services").isNull()).count() == 0
 
 
-def test_quality_reload_is_full_duplicate(spark, store):
+def test_quality_reload_is_full_duplicate(spark, store, hospital_csvs):
     s, _, _, _ = store
-    r = load_quality_batch(spark, "2021-07-01", CMS_1, s)
+    r = load_quality_batch(spark, "2021-07-01", hospital_csvs[2], s)
     assert r.inserted == 0
     assert r.duplicates > 5000
 
@@ -112,7 +170,7 @@ def test_all_seven_reports_run(spark, store):
     assert t[0].avg_rating >= b[0].avg_rating
 
 
-def test_load_timing_and_log_lines(spark, store, tmp_path):
+def test_load_timing_and_log_lines(spark, store, hospital_csvs, tmp_path):
     """O2/O3 parity: every load report carries wall-clock seconds
     (load_hhs.py:65,149-150) and the rotating-file logger emits
     start/finish + counter lines (logging_module.py:5-15)."""
@@ -126,7 +184,7 @@ def test_load_timing_and_log_lines(spark, store, tmp_path):
 
     log_file = tmp_path / "log_output.txt"
     setup_logging(str(log_file))
-    r = load_quality_batch(spark, "2021-07-01", CMS_1, s)  # cheap full-dup reload
+    r = load_quality_batch(spark, "2021-07-01", hospital_csvs[2], s)  # cheap full-dup reload
     assert r.wall_s > 0.0
     # third-party DEBUG chatter (py4j fires on every JVM call) must NOT
     # reach the file: DEBUG is scoped to the package logger, root stays
