@@ -8,11 +8,13 @@ round-trip per row) or a batched IN-list probe
 - within-batch first-occurrence  → row_number window with an explicit
   deterministic tie-break (Spark has no insertion order);
 - against already-loaded data    → left_anti (keep) / left_semi
-  (quarantine) joins on the key.
+  (quarantine) joins on the key; the loaders use the one-join form,
+  ``pipeline.sinks.ParquetStore.append_new``, which also counts both
+  sides on the write.
 
-Scale: the anti/semi probe side only needs the KEY columns of the
-target table — select them before the join so the shuffle carries keys
-only; when the target is dimension-sized, broadcast it.
+Scale: the probe side only needs the KEY columns of the target table —
+select them before the join so the shuffle carries keys only; AQE
+broadcasts it when the target is dimension-sized.
 """
 
 from __future__ import annotations
@@ -70,9 +72,7 @@ def first_wins_dedup_agg(
     )
 
 
-def split_new_vs_existing(
-    batch: DataFrame, existing: DataFrame, keys: Sequence[str], broadcast_existing: bool = False
-) -> tuple[DataFrame, DataFrame]:
+def split_new_vs_existing(batch: DataFrame, existing: DataFrame, keys: Sequence[str]) -> tuple[DataFrame, DataFrame]:
     """(new_rows, duplicate_rows) for a batch vs. an already-loaded table.
 
     D1/D2 (per-row probe) and D3 (IN-list probe) both become one
@@ -81,8 +81,6 @@ def split_new_vs_existing(
     payload.
     """
     probe = existing.select(*keys).dropDuplicates(list(keys))
-    if broadcast_existing:
-        probe = F.broadcast(probe)
     on = list(keys)
     return batch.join(probe, on=on, how="left_anti"), batch.join(probe, on=on, how="left_semi")
 

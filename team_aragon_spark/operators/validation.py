@@ -2,9 +2,9 @@
 
 The reference validates row-by-row in a Python loop
 (``load_hhs.py:104-127``) and re-reads the raw CSV to emit quarantine
-rows (``load_hhs.py:154``).  Here the whole thing is ONE scan:
+rows (``load_hhs.py:154``).  Here both branches are filters over one
+input:
 
-    cleaned = clean(df).persist()
     valid   = cleaned.filter(pred)
     invalid = cleaned.filter(~pred)
 
@@ -14,9 +14,10 @@ not True — for NULL inputs and a filter drops NULL predicates, so both
 branches must use explicit null-safe predicates rather than relying on
 negation.
 
-Scale: `persist(MEMORY_AND_DISK)` amortizes the scan across the two
-branches; at 100 TB you would instead write both branches in one pass
-via ``df.write.partitionBy("is_valid")`` to avoid caching pressure.
+Scale: a caller that consumes both branches persists the input first
+(the HHS loader persists its cleaned scan); at 100 TB you would instead
+write both branches in one pass via ``df.write.partitionBy("is_valid")``
+to avoid caching pressure.
 """
 
 from __future__ import annotations
@@ -27,7 +28,6 @@ from operator import and_
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 
 @dataclass(frozen=True)
@@ -58,23 +58,15 @@ def validity_predicate(rules: list[RangeRule]) -> Column:
     return reduce(and_, (r.predicate() for r in rules), F.lit(True))
 
 
-def validation_split(df: DataFrame, rules: list[RangeRule], persist: bool = True) -> tuple[DataFrame, DataFrame]:
-    """Split into (valid, invalid) with one underlying scan.
+def validation_split(df: DataFrame, rules: list[RangeRule]) -> tuple[DataFrame, DataFrame]:
+    """Split into (valid, invalid).
 
     ``invalid`` is the exact complement: rows failing >=1 rule.  Because
     each rule's predicate is null-safe (never NULL), plain negation is
     correct here.
     """
-    if persist:
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
     pred = validity_predicate(rules)
     return df.filter(pred), df.filter(~pred)
-
-
-def load_report(valid: DataFrame, invalid: DataFrame) -> dict[str, int]:
-    """Success/error counters (reference O1: ``load_hhs.py:157-161``)."""
-    n_valid, n_invalid = valid.count(), invalid.count()
-    return {"valid": n_valid, "invalid": n_invalid, "total": n_valid + n_invalid}
 
 
 def write_quarantine(invalid: DataFrame, path: str) -> None:

@@ -4,18 +4,19 @@ Reference shape (``load_hhs.py:35-167``): pandas scan → per-row loop
 with 3 SELECT probes + ≤3 INSERTs per row (~30k DB round-trips per
 weekly file) → commit → re-read CSV for quarantine.
 
-Engine shape: ONE logical plan per target table —
+Engine shape: one scan, then ONE plan per target table —
 
     scan(csv, typed) → clean (sentinel→NULL, date parse)
       → validation split (null-safe F1 predicate)
       → first-wins within-batch dedup (explicit tie-break)
-      → anti-join vs stored keys (new) / semi-join (dups → quarantine)
-      → append valid to partitioned parquet; write quarantine CSV
+      → ParquetStore.append_new: left join vs stored keys flags new /
+        duplicate, the write appends the new rows and counts both
+      → write quarantine CSV of the invalid rows
 
 No per-row work, no driver-side loop, no second scan of the source.
-At 100 TB the same plan holds: the anti-join probe side is a
-keys-only projection of the target (broadcast when dimension-sized),
-and the fact append is partitioned by ``collection_week`` so later
+At 100 TB the same plan holds: the probe side is a keys-only
+projection of the target (broadcast when dimension-sized), and the
+fact append is partitioned by ``collection_week`` so later
 week-filtered queries prune partitions.
 """
 
@@ -23,12 +24,12 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from team_aragon_spark.operators.cleaning import parse_wkt_point
-from team_aragon_spark.operators.dedup import first_wins_dedup, split_new_vs_existing
+from team_aragon_spark.operators.dedup import first_wins_dedup
 from team_aragon_spark.pipeline.obs import logger, timed_load
 from team_aragon_spark.operators.validation import (
     non_negative_rules,
@@ -36,7 +37,7 @@ from team_aragon_spark.operators.validation import (
     write_quarantine,
 )
 from team_aragon_spark.pipeline.sinks import ParquetStore
-from team_aragon_spark.schemas import HHS_BED_METRIC_COLS
+from team_aragon_spark.schemas import HHS_BED_METRIC_COLS, STORE_SCHEMAS
 from team_aragon_spark.sources.readers import clean_hhs, read_hhs_csv
 
 
@@ -52,17 +53,16 @@ class LoadReport:
     wall_s: float = 0.0
 
 
-HOSPITALS_COLS = ("hospital_pk", "hospital_name")
-LOCATIONS_COLS = (
-    "hospital_pk",
-    "state",
-    "address",
-    "city",
-    "zip",
-    "fips_code",
-    "geocoded_hospital_address",
+# (table, keys, first-wins tie-break) in the store's column names.  The
+# dimensions are insert-once per hospital (reference D1,
+# load_hhs.py:75,89); weekly re-files are ~99.98 % repeats, so they
+# append almost nothing after week 1.  Bed facts are keyed by
+# (hospital, week) (D2).
+HHS_TABLES = (
+    ("hospitals", ("hospital_pk",), "hospital_name"),
+    ("hospital_locations", ("hospital_fk",), "state"),
+    ("hospital_beds", ("hospital_fk", "collection_week"), HHS_BED_METRIC_COLS[0]),
 )
-BEDS_COLS = ("hospital_pk", "collection_week", *HHS_BED_METRIC_COLS)
 
 
 def load_hhs_batch(spark: SparkSession, csv_path: str, store: ParquetStore, quarantine_dir: str | None = None) -> LoadReport:
@@ -79,61 +79,23 @@ def load_hhs_batch(spark: SparkSession, csv_path: str, store: ParquetStore, quar
 
 def _load_hhs_batch(spark: SparkSession, csv_path: str, store: ParquetStore, quarantine_dir: str | None) -> LoadReport:
     cleaned = clean_hhs(read_hhs_csv(spark, csv_path)).persist(StorageLevel.MEMORY_AND_DISK)
-
-    rules = non_negative_rules(HHS_BED_METRIC_COLS)
-    valid, invalid = validation_split(cleaned, rules, persist=False)
-    valid = valid.persist(StorageLevel.MEMORY_AND_DISK)
+    valid, invalid = validation_split(cleaned, non_negative_rules(HHS_BED_METRIC_COLS))
+    # Store-side columns: locations and beds refer to the hospital as
+    # hospital_fk, and the WKT POINT becomes (longitude, latitude)
+    # doubles; the raw string rides along for reference parity.
+    valid = parse_wkt_point(valid.withColumn("hospital_fk", F.col("hospital_pk")))
 
     table_rows: dict[str, int] = {}
     dup_counts: dict[str, int] = {}
-
-    # Hospitals + locations: insert-once dimensions keyed by hospital_pk
-    # (reference D1, load_hhs.py:75,89).  Weekly re-files are ~99.98 %
-    # repeats, so the anti-join drops almost everything after week 1.
-    for table, cols, rename in (
-        ("hospitals", HOSPITALS_COLS, {}),
-        ("hospital_locations", LOCATIONS_COLS, {"hospital_pk": "hospital_fk"}),
-    ):
-        batch = first_wins_dedup(valid.select(*cols), ["hospital_pk"], ["hospital_name" if "hospital_name" in cols else "state"])
-        if store.exists(table):
-            existing = store.read(spark, table).select(
-                F.col(rename.get("hospital_pk", "hospital_pk")).alias("hospital_pk")
-            )
-            new, dups = split_new_vs_existing(batch, existing, ["hospital_pk"])
-        else:
-            new, dups = batch, batch.limit(0)
-        for old, newname in rename.items():
-            new = new.withColumnRenamed(old, newname)
-        if table == "hospital_locations":
-            # WKT POINT -> (longitude, latitude) doubles; the raw
-            # string rides along for reference parity.
-            new = parse_wkt_point(new)
-        n_new, n_dup = new.count(), dups.count()
-        store.append(new, table)
-        table_rows[table] = n_new
-        dup_counts[table] = n_dup
-
-    # Bed facts: composite key (hospital_pk, collection_week) (D2).
-    beds = first_wins_dedup(valid.select(*BEDS_COLS), ["hospital_pk", "collection_week"], [HHS_BED_METRIC_COLS[0]])
-    if store.exists("hospital_beds"):
-        existing = store.read(spark, "hospital_beds").select(
-            F.col("hospital_fk").alias("hospital_pk"), "collection_week"
-        )
-        new_beds, dup_beds = split_new_vs_existing(beds, existing, ["hospital_pk", "collection_week"])
-    else:
-        new_beds, dup_beds = beds, beds.limit(0)
-    new_beds = new_beds.withColumnRenamed("hospital_pk", "hospital_fk")
-    n_new, n_dup = new_beds.count(), dup_beds.count()
-    store.append(new_beds, "hospital_beds")
-    table_rows["hospital_beds"] = n_new
-    dup_counts["hospital_beds"] = n_dup
+    for table, keys, tiebreak in HHS_TABLES:
+        batch = first_wins_dedup(valid.select(*STORE_SCHEMAS[table].fieldNames()), keys, [tiebreak])
+        table_rows[table], dup_counts[table] = store.append_new(spark, batch, table, keys)
 
     n_invalid = invalid.count()
     if quarantine_dir:
         write_quarantine(invalid, quarantine_dir)
 
     cleaned.unpersist()
-    valid.unpersist()
     return LoadReport(table_rows, n_invalid, dup_counts)
 
 

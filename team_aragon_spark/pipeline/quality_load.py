@@ -5,22 +5,21 @@ remaps/casts → one IN-list dedup probe → 500-row executemany batches
 with per-row retry on failure → quarantine re-read.
 
 Engine shape: scan → clean → within-batch first-wins dedup →
-anti/semi join vs ``(facility_id, data_date)`` already stored →
-append + quarantine.  The reference's per-row retry path (O4) is
-deleted by design: rows that would violate constraints are exactly
-the ones pre-filtered here, so the sink cannot fail per-row
-(SURVEY.md §2.I O4 — documented semantic delta).
+``ParquetStore.append_new`` on ``(facility_id, data_date)``: one left
+join vs the stored keys quarantines the duplicates and appends the
+new rows, counting both on the write.  The reference's per-row retry
+path (O4) is deleted by design: rows that would violate constraints
+are exactly the ones pre-filtered here, so the sink cannot fail
+per-row (SURVEY.md §2.I O4 — documented semantic delta).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
-from team_aragon_spark.operators.dedup import first_wins_dedup, split_new_vs_existing
-from team_aragon_spark.operators.validation import write_quarantine
+from team_aragon_spark.operators.dedup import first_wins_dedup
 from team_aragon_spark.pipeline.obs import logger, timed_load
 from team_aragon_spark.pipeline.sinks import ParquetStore
 from team_aragon_spark.sources.readers import clean_cms, read_cms_csv
@@ -51,23 +50,14 @@ def _load_quality_batch(
 ) -> QualityLoadReport:
     batch = clean_cms(read_cms_csv(spark, csv_path), data_date)
     batch = first_wins_dedup(batch, ["facility_id", "data_date"], ["hospital_type"])
-
-    if store.exists("hospital_quality"):
-        # The reference probes only the same data_date's keys
-        # (load_quality.py:27-29: WHERE facility_id IN (...) AND
-        # data_date = %s); the date filter prunes stored partitions.
-        existing = store.read(spark, "hospital_quality").filter(
-            F.col("data_date") == F.lit(data_date).cast("date")
-        )
-        new, dups = split_new_vs_existing(batch, existing, ["facility_id", "data_date"])
-    else:
-        new, dups = batch, batch.limit(0)
-
-    n_new, n_dup = new.count(), dups.count()
-    store.append(new, "hospital_quality")
-    if quarantine_dir:
-        write_quarantine(dups, quarantine_dir)
-    return QualityLoadReport(inserted=n_new, duplicates=n_dup)
+    # The reference probes only the same data_date's keys
+    # (load_quality.py:27-29: WHERE facility_id IN (...) AND
+    # data_date = %s); the batch's constant data_date reaches the
+    # stored-key scan as a partition filter.
+    inserted, duplicates = store.append_new(
+        spark, batch, "hospital_quality", ("facility_id", "data_date"), quarantine_dir
+    )
+    return QualityLoadReport(inserted=inserted, duplicates=duplicates)
 
 
 def main(argv: list[str] | None = None) -> None:

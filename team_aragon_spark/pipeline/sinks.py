@@ -9,7 +9,8 @@ with engine-native storage:
   (F2-F4 become metadata-only file skips).  Appends are atomic at the
   task-commit level (Spark's commit protocol), which replaces the
   reference's txn-per-file/rollback (O4/O5): validation happens
-  *before* the sink, so writes cannot fail per-row.
+  *before* the sink, so writes cannot fail per-row.  Both loaders append
+  through :meth:`ParquetStore.append_new` (new vs stored, both counted).
 
 - **jdbc_append** — parity with the reference's "DataFrame → RDBMS"
   path; batching is the JDBC writer's ``batchsize`` (the reference's
@@ -23,11 +24,16 @@ from __future__ import annotations
 
 import os
 import re
+from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from team_aragon_spark.operators.validation import write_quarantine
+from team_aragon_spark.schemas import STORE_SCHEMAS
+
 BATCH_COL = "__batch"
+_STORED = "__stored"
 _PTR_SUFFIX = ".__current"
 _VERSION_PAT = r"\.__v(\d+)$"
 
@@ -76,10 +82,18 @@ class ParquetStore:
         )
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
-        df = spark.read.parquet(self.path(table))
-        if BATCH_COL in df.columns:  # lineage partition, not table schema
-            df = df.drop(BATCH_COL)
-        return df
+        """Lazy scan of ``table``.  A table in ``STORE_SCHEMAS`` reads with
+        its declared schema and column order (no footer-reading job) and
+        as an empty frame when absent; other tables infer their schema."""
+        schema = STORE_SCHEMAS.get(table)
+        if schema is None:
+            df = spark.read.parquet(self.path(table))
+            if BATCH_COL in df.columns:  # lineage partition, not table schema
+                df = df.drop(BATCH_COL)
+            return df
+        if not self.exists(table):
+            return spark.createDataFrame([], schema)
+        return spark.read.schema(schema).parquet(self.path(table)).select(*schema.fieldNames())
 
     def append(self, df: DataFrame, table: str) -> None:
         writer = df.write.mode("append")
@@ -87,6 +101,32 @@ class ParquetStore:
         if part_col:
             writer = writer.partitionBy(part_col)
         writer.parquet(self.path(table))
+
+    def append_new(
+        self, spark: SparkSession, batch: DataFrame, table: str, keys: Sequence[str], quarantine_dir: str | None = None
+    ) -> tuple[int, int]:
+        """Append the ``batch`` rows whose ``keys`` are not stored yet and
+        return ``(inserted, duplicates)``.
+
+        One plan replaces the reference's per-row and IN-list probes
+        (D1-D3, ``load_hhs.py:8-32``, ``load_quality.py:13-31``): a left
+        join to the stored keys flags each row, an ``Observation`` on the
+        write counts both flags, and only new rows are written.  ``batch``
+        must be unique on ``keys``.  Duplicates go to ``quarantine_dir``
+        before the append, so they are decided against the store as it
+        was before this write.
+        """
+        on = list(keys)
+        stored = self.read(spark, table).select(*on).distinct().withColumn(_STORED, F.lit(True))
+        flagged = batch.join(stored, on, "left")
+        is_dup = F.col(_STORED).isNotNull()
+        if quarantine_dir:
+            write_quarantine(flagged.filter(is_dup).select(*batch.columns), quarantine_dir)
+        counts = Observation()
+        observed = flagged.observe(counts, F.count_if(~is_dup).alias("new"), F.count_if(is_dup).alias("dup"))
+        self.append(observed.filter(~is_dup).select(*batch.columns), table)
+        got = counts.get  # waits for the write's QueryExecutionListener event
+        return got["new"], got["dup"]
 
     def append_batch(self, df: DataFrame, table: str, batch_id: str) -> None:
         """Idempotent, replay-safe append (O5 upgrade).

@@ -459,7 +459,7 @@ def q17_quarantine_rows(spark, sf_dir):
 
     li = _t(spark, sf_dir, "lineitem")
     rules = _lineitem_rules()
-    _valid, invalid = validation_split(li, rules, persist=False)
+    _valid, invalid = validation_split(li, rules)
     reason = (
         F.when(~rules[0].predicate(), F.lit("l_quantity"))
         .when(~rules[1].predicate(), F.lit("l_tax"))

@@ -1,16 +1,16 @@
-"""Explicit schemas — the engine never infers in production paths.
-
-Two families:
+"""Explicit schemas, in two families.
 
 1. The driver's star-schema testdata (``/root/testdata/sf*/*.parquet``).
-   Parquet is self-describing, but the declared StructTypes document
-   the contract and are asserted by tests.
+   Nothing reads ``STAR_SCHEMAS``: ``sources.catalog`` reads each
+   file's own schema, and the files hold ``timestamp_ntz`` where these
+   declare ``TimestampType`` (``tests/test_testdata_contract.py``).
 2. The reference pipeline's tables (hospital ETL).  The reference
    declares fixed DDL for its four Postgres tables
    (``design_table_schema.ipynb`` cells 0-3) and relies on pandas
-   inference for CSV ingest (``load_hhs.py:46``); we declare the
-   ingest schema explicitly instead — inference at 100 TB means a
-   second full scan and nondeterministic types (SURVEY.md §1.2, P8).
+   inference for CSV ingest (``load_hhs.py:46``).  Here the CSV readers
+   cast to the ingest schema, and ``ParquetStore.read`` reads the store
+   tables with ``STORE_SCHEMAS``, which ``tests/test_pipeline.py`` pins
+   to the schemas Spark infers from a loader-written store.
 """
 
 from __future__ import annotations
@@ -218,3 +218,11 @@ HOSPITAL_QUALITY_SCHEMA = T.StructType(
         T.StructField("data_date", T.DateType()),
     ]
 )
+
+# The tables ParquetStore reads with a declared schema.
+STORE_SCHEMAS: dict[str, T.StructType] = {
+    "hospitals": HOSPITALS_SCHEMA,
+    "hospital_locations": HOSPITAL_LOCATIONS_SCHEMA,
+    "hospital_beds": HOSPITAL_BEDS_SCHEMA,
+    "hospital_quality": HOSPITAL_QUALITY_SCHEMA,
+}

@@ -38,6 +38,12 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def default_driver_memory() -> str:
+    """Half the physical memory in whole GiB, 1g to 24g."""
+    phys_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+    return f"{min(max(phys_gib // 2, 1), 24)}g"
+
+
 def get_spark(app_name: str = "team-aragon-spark", shuffle_partitions: int | None = None) -> SparkSession:
     """Create (or reuse) a SparkSession with engine defaults."""
     cpus = default_parallelism()
@@ -48,9 +54,9 @@ def get_spark(app_name: str = "team-aragon-spark", shuffle_partitions: int | Non
         # local mode runs driver + all executor threads in ONE JVM, so
         # this heap is the entire engine's memory; 8g starved 32
         # concurrent tasks on scaled (100x) inputs into GC-locker OOM.
-        # Sized for the 128 GiB box; on a real cluster executor memory
-        # is set by the deploy config, not here.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        # The default scales with the machine; on a real cluster executor
+        # memory is set by the deploy config, not here.
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory())
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.ui.enabled", "false")
     )

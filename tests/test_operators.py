@@ -30,7 +30,7 @@ def test_sentinel_before_validation_order(spark):
         [("a", -999999.0), ("b", -3.0), ("c", 5.0), ("d", None)], ["id", "m"]
     )
     cleaned = sentinel_to_null(df, -999999.0, ["m"])
-    valid, invalid = validation_split(cleaned, non_negative_rules(["m"]), persist=False)
+    valid, invalid = validation_split(cleaned, non_negative_rules(["m"]))
     assert {r.id for r in valid.collect()} == {"a", "c", "d"}  # sentinel+NULL valid
     assert {r.id for r in invalid.collect()} == {"b"}  # true negative quarantined
 
@@ -39,13 +39,13 @@ def test_validation_null_negation_is_safe(spark):
     """~(col >= 0) is NULL for NULL inputs; the split must still route
     every row to exactly one side."""
     df = spark.createDataFrame([(1, None), (2, -1.0), (3, 0.0)], ["id", "x"])
-    valid, invalid = validation_split(df, [RangeRule("x", min=0)], persist=False)
+    valid, invalid = validation_split(df, [RangeRule("x", min=0)])
     assert valid.count() + invalid.count() == 3
 
 
 def test_range_rule_max_bound(spark):
     df = spark.createDataFrame([(1, 5.0), (2, 50.0), (3, None)], ["id", "x"])
-    valid, invalid = validation_split(df, [RangeRule("x", min=0, max=10)], persist=False)
+    valid, invalid = validation_split(df, [RangeRule("x", min=0, max=10)])
     assert {r.id for r in valid.collect()} == {1, 3}
     assert {r.id for r in invalid.collect()} == {2}
 

@@ -149,6 +149,89 @@ def test_quality_reload_is_full_duplicate(spark, store, hospital_csvs):
     assert r.duplicates > 5000
 
 
+def test_quality_quarantine_partial_duplicate(spark, hospital_csvs, tmp_path):
+    """A snapshot whose first 2,000 rows are already stored inserts the
+    rest and quarantines exactly those 2,000: duplicates are decided
+    against the store as it was before the load's own write."""
+    cms = hospital_csvs[2]
+    rows = _read_csv(cms)
+    assert len({r["Facility ID"] for r in rows}) == len(rows)
+    head = tmp_path / "cms_head.csv"
+    with open(head, "w", newline="", encoding="utf-8") as f:
+        writer = csv.DictWriter(f, fieldnames=list(rows[0]))
+        writer.writeheader()
+        writer.writerows(rows[:2000])
+    s = ParquetStore(str(tmp_path / "store"))
+    first = load_quality_batch(spark, "2021-07-01", str(head), s)
+    assert (first.inserted, first.duplicates) == (2000, 0)
+
+    quarantine = tmp_path / "quarantine"
+    full = load_quality_batch(spark, "2021-07-01", cms, s, quarantine_dir=str(quarantine))
+    assert (full.inserted, full.duplicates) == (len(rows) - 2000, 2000)
+    quarantined = [r for p in sorted(quarantine.glob("part-*.csv")) for r in _read_csv(p)]
+    assert sorted(r["facility_id"] for r in quarantined) == sorted(r["Facility ID"] for r in rows[:2000])
+    assert s.read(spark, "hospital_quality").count() == len(rows)
+
+
+def _within(seconds, fn, *args):
+    """``fn(*args)`` on a worker thread; fails instead of hanging when it
+    has not returned after ``seconds``."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    pool = ThreadPoolExecutor(1)
+    try:
+        return pool.submit(fn, *args).result(timeout=seconds)
+    finally:
+        pool.shutdown(wait=False)
+
+
+def test_header_only_inputs_load_nothing(spark, store, hospital_csvs, tmp_path):
+    """Header-only HHS and CMS files load nothing into an empty store and
+    into a loaded one, without waiting forever on the counts of a write
+    of zero rows, and the real loads between them count exactly as on
+    the module's fresh store."""
+    hhs_w1, hhs_w2, cms = hospital_csvs
+    _, f1, f2, fq = store
+    empty_hhs, empty_cms = tmp_path / "hhs_header.csv", tmp_path / "cms_header.csv"
+    for src, dst in ((hhs_w1, empty_hhs), (cms, empty_cms)):
+        with open(src, newline="", encoding="utf-8") as f:
+            dst.write_text(f.readline(), encoding="utf-8")
+    s = ParquetStore(str(tmp_path / "store"))
+
+    def load_nothing():
+        h = _within(120, load_hhs_batch, spark, str(empty_hhs), s)
+        assert h.table_rows == h.quarantined_duplicate == dict.fromkeys(f1.table_rows, 0)
+        assert h.quarantined_invalid == 0
+        q = _within(120, load_quality_batch, spark, "2021-07-01", str(empty_cms), s)
+        assert (q.inserted, q.duplicates) == (0, 0)
+
+    load_nothing()
+    for table in f1.table_rows:
+        assert s.read(spark, table).count() == 0, table
+    r1 = load_hhs_batch(spark, hhs_w1, s)
+    q1 = load_quality_batch(spark, "2021-07-01", cms, s)
+    load_nothing()
+    r2 = load_hhs_batch(spark, hhs_w2, s)
+    for got, want in ((r1, f1), (r2, f2)):
+        assert got.table_rows == want.table_rows
+        assert got.quarantined_invalid == want.quarantined_invalid
+        assert got.quarantined_duplicate == want.quarantined_duplicate
+    assert (q1.inserted, q1.duplicates) == (fq.inserted, fq.duplicates)
+
+
+def test_declared_store_schemas_match_written(spark, store):
+    """Each declared store schema (field names and types) is the schema
+    Spark infers from the files the loaders wrote, so reading with the
+    declared schemas cannot drift from what is stored."""
+    from team_aragon_spark.schemas import STORE_SCHEMAS
+
+    s, *_ = store
+    for table, schema in STORE_SCHEMAS.items():
+        inferred = spark.read.parquet(s.path(table)).schema
+        assert {f.name: f.dataType for f in inferred} == {f.name: f.dataType for f in schema}, table
+        assert s.read(spark, table).columns == schema.fieldNames(), table
+
+
 def test_all_seven_reports_run(spark, store):
     s, *_ = store
     week = "2022-09-23"

@@ -96,6 +96,42 @@ def test_store_date_partition_pruning(spark, tmp_path):
     assert [r.hospital_fk for r in got.collect()] == ["h2"]
 
 
+def test_quality_probe_scans_only_its_data_date(spark, tmp_path, monkeypatch):
+    """The CMS load's stored-key probe reads only the load's own
+    ``data_date`` partition (the reference probes ``WHERE data_date =
+    %s``, load_quality.py:27-29): the batch's constant date reaches the
+    stored-key scan as a partition filter."""
+    import re
+
+    from team_aragon_spark.pipeline.quality_load import load_quality_batch
+    from team_aragon_spark.pipeline.sinks import ParquetStore
+
+    cms = tmp_path / "cms.csv"
+    cms.write_text(
+        "Facility ID,Hospital Type,Hospital Ownership,Emergency Services,Hospital overall rating\n"
+        "010001,Acute Care Hospitals,Proprietary,Yes,3\n"
+        "010005,Childrens,Government - State,No,Not Available\n"
+    )
+    store = ParquetStore(str(tmp_path / "store"))
+    load_quality_batch(spark, "2021-07-01", str(cms), store)
+
+    plans = []
+    real_append = ParquetStore.append
+
+    def capture(self, df, table):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        real_append(self, df, table)
+
+    monkeypatch.setattr(ParquetStore, "append", capture)
+    r = load_quality_batch(spark, "2021-10-01", str(cms), store)
+    assert (r.inserted, r.duplicates) == (2, 0)
+    [plan] = plans
+    scans = [line for line in plan.splitlines() if "FileScan parquet" in line]
+    assert len(scans) == 1, plan
+    m = re.search(r"PartitionFilters: \[(.*?)\]", scans[0])
+    assert m and re.search(r"2021-10-01 = data_date#\d+|data_date#\d+ = 2021-10-01", m.group(1)), plan
+
+
 def test_compaction_shrinks_files_preserves_data(spark, tmp_path):
     """compact_table must reduce the file count and leave content and
     partition layout (pruning) intact."""
@@ -105,10 +141,11 @@ def test_compaction_shrinks_files_preserves_data(spark, tmp_path):
 
     store = ParquetStore(str(tmp_path))
     rows = [(f"h{i}", date(2022, 9, 23 + 7 * (i % 2)), float(i)) for i in range(200)]
-    df = spark.createDataFrame(rows, ["hospital_fk", "collection_week", "beds"])
+    # a declared bed-metric column, so the store's schema-on-read keeps it
+    df = spark.createDataFrame(rows, ["hospital_fk", "collection_week", "total_icu_beds_7_day_avg"])
     # simulate many tiny appends -> fragmented tree
     for chunk in range(10):
-        store.append(df.filter(F.col("beds") % 10 == chunk).repartition(4), "hospital_beds")
+        store.append(df.filter(F.col("total_icu_beds_7_day_avg") % 10 == chunk).repartition(4), "hospital_beds")
     import pathlib
 
     n_before = len(list(pathlib.Path(store.path("hospital_beds")).rglob("*.parquet")))
